@@ -60,6 +60,9 @@ object FuzzDiff {
 
   def run(spark: SparkSession, seeds: Range, dir: String): (Int, Int) = {
     import spark.implicits._
+    // fuzz under the planning every registered query gets (`Tables`
+    // installs it on first load; the fuzz tables are read directly)
+    graft.core.TerminalSort.install(spark)
     val tablesDir = s"$dir/tables"
     val outDir = s"$dir/out"
     def rm(p: java.io.File): Unit = {

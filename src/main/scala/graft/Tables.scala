@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -14,8 +21,47 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Loading a table also installs the terminal-sort planning rule, so a
+    * session built without `spark.sql.extensions` plans queries the same
+    * way as one built with `graft.exprs.GraftExtensions`. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    core.TerminalSort.install(spark)
+    read(spark, s"$dir/$name.parquet")
+  }
+
+  /** `spark.read.parquet(path)` without Spark's schema-inference job when
+    * `path` names a single file: the schema comes from that file's footer,
+    * read by the calling process and converted exactly as inference
+    * would. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema Spark's inference would give the single parquet file at
+    * `path`: `ParquetFileFormat.readSchemaFromFooter` with a converter
+    * built from the session conf, so `nanosAsLong`, NTZ inference and
+    * binary-as-string apply as they do in inference. None for
+    * directories, globs, missing paths and under `mergeSchema`, which
+    * keep Spark's own inference (and its errors). */
+  def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+    else {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val status =
+        try Some(p.getFileSystem(hadoopConf).getFileStatus(p))
+        catch { case _: java.io.FileNotFoundException => None }
+      status.filter(_.isFile).map { st =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(st.getPath, meta), new ParquetToSparkSchemaConverter(conf))
+      }
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")

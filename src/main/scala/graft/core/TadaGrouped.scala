@@ -672,10 +672,11 @@ object Rolling {
           // the union's two branches scan in parallel (2 map tasks)
           // while explode serializes all tag generation on one task.
           // That inverts on real inputs (many splits: both forms
-          // parallelize, and one scan halves the read I/O), so the
-          // production setting is `graft.rollingDuration.singleScan=
-          // true`; the local default keeps the union form — the
-          // bench-comparable shape on single-split inputs.
+          // parallelize, and one scan halves the read I/O). The knob
+          // `graft.rollingDuration.singleScan` is off by default and
+          // nothing sets it. The explode form is not verified end to
+          // end: a PrefixSpec case matches it to the union form on one
+          // small frame, but no oracle or bench run uses it.
           val singleScan =
             try f.df.sparkSession.conf
               .get("graft.rollingDuration.singleScan", "false").toBoolean

@@ -13,15 +13,23 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * session created on the cluster — including SQL-only surfaces
   * (Thrift server, `spark.sql(...)` notebooks) that never touch graft's
   * Scala API. Both paths bind the same `GraftFunctions.builders` table,
-  * so they cannot drift apart. */
+  * so they cannot drift apart.
+  *
+  * It also injects the `graft.core.TerminalSort` planning rule, which
+  * `graft.Tables` otherwise installs imperatively on first table load. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
       "", "", "", "", "", "", "built-in")
 
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
+    // the latest logical extension point: the rule wants the final size
+    // estimates, as the imperative install's "User Provided Optimizers"
+    // batch sees them
+    ext.injectPreCBORule(_ => graft.core.TerminalSort)
+  }
 }

@@ -35,7 +35,7 @@ object Streams {
   /** Streaming read of an events-shaped parquet directory/file. */
   def readEvents(spark: SparkSession, pathOrGlob: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(pathOrGlob).schema
+    val schema = graft.Tables.read(spark, pathOrGlob).schema
     val raw = spark.readStream.schema(schema).parquet(pathOrGlob)
     graft.Tables.normalizeEventTs(raw) // same branch table as the batch reader
   }
